@@ -5,17 +5,19 @@ the strictly largest component (src/heuristics.rs:10-58; ties broken by
 nondeterministic HashMap order — the engine breaks ties on the smallest
 component label, and the fixtures have a unique maximum).
 
-Spark-native algorithms (A/B pair, equivalence pinned on random
-graphs):
+Spark-native algorithm: min-label propagation with pointer jumping
+(label := label(label)), one ``plans.iterate.fixpoint`` round per
+propagation step. Large-star/small-star contraction (Kiveris et al.,
+SoCC'14) was the measured alternative; it lost its A/B twice and was
+deleted.
 
-- min-label propagation with pointer jumping (label := label(label)) —
-  ~O(log diameter) rounds; the default (measured faster at sf0.1,
-  see connected_components).
-- large-star/small-star contraction — O(log n) alternations regardless
-  of diameter; each round is a handful of shuffles over a shrinking
-  edge set. Kept as the comparator / high-diameter option.
-
-Lineage is truncated per round with localCheckpoint in both.
+Round count: pointer jumping does NOT make propagation O(log
+diameter). The jump reads the previous round's labels, and a label is
+a node id, so it only shortcuts when the id order happens to follow the
+path. On a path whose ids are shuffled, min labels still creep along
+it: a 128-node path with shuffled ids (seed 7) changed exactly one
+label per round from round 17 to round 60. Rounds are bounded by the
+diameter, not its log; ``max_iter`` caps them.
 """
 
 from __future__ import annotations
@@ -24,32 +26,23 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.iterate import fixpoint, stable
 
 
 def connected_components(g: StreetGraph, max_iter: int = 60) -> DataFrame:
     """→ labels DataFrame (id, comp) where comp = min node id in
-    component. Default algorithm: min-label propagation with pointer
-    jumping — A/B-measured against large-star/small-star contraction at
-    sf0.1 (graph cached, interleaved reps): label-prop 8.1-8.6 s vs
-    star 11.0-14.0 s. Star converges in one fewer driver round (4 vs 5)
-    but each of its rounds rewrites the full edge relation through two
-    extra shuffles, while pointer jumping keeps label-prop's round
-    count ~O(log diameter) too — so fewer rounds does not buy wall
-    time here. ``connected_components_star`` remains available for
-    graphs where per-round edge contraction pays (very high diameter
-    with rapidly shrinking edge sets); equivalence of the two is pinned
-    on random graphs + a long chain by tests."""
-    return connected_components_labelprop(g, max_iter=max_iter)
-
-
-def connected_components_labelprop(g: StreetGraph, max_iter: int = 60) -> DataFrame:
-    """Min-label propagation + pointer jumping (O(log diameter) rounds)."""
-    labels = g.nodes.select("id", F.col("id").alias("comp")).localCheckpoint(eager=True)
+    component, by min-label propagation with pointer jumping. It won
+    its A/B against large-star/small-star contraction twice (sf0.1:
+    8.1-8.6 s vs 11.0-14.0 s; traced simplify at local[4]: 4.14-6.51 s
+    vs 6.26-10.28 s, BENCH/BASELINE.md): star needs fewer driver
+    rounds, but each of its rounds rewrites the full edge relation
+    through two extra shuffles."""
     edges_bi = g.edges.select("src", "dst").unionByName(
         g.edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    )
 
-    for _ in range(max_iter):
+    def step(state):
+        edges_bi, labels = state
         # 1. neighbor-min: the smallest label among each node's neighbors
         neigh_min = (
             edges_bi.join(
@@ -78,91 +71,16 @@ def connected_components_labelprop(g: StreetGraph, max_iter: int = 60) -> DataFr
                 "prev",
             )
         )
-        flat = flat.localCheckpoint(eager=True)
-        changed = flat.filter(F.col("comp") != F.col("prev")).count()
-        labels = flat.select("id", "comp")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"connected_components did not converge in {max_iter} iterations")
+        return edges_bi, flat
 
-
-def connected_components_star(g: StreetGraph, max_iter: int = 40) -> DataFrame:
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14) — the A/B alternative to the label-propagation +
-    pointer-jumping loop above.
-
-    large-star(u): every neighbor v > u re-links to m(u) = min(Γ(u) ∪
-    {u}); small-star(u): every neighbor v < u, and u itself, links to
-    m(u). Both preserve connectivity and node coverage (every edge is
-    emitted from exactly one endpoint; a node with no emission of its
-    own is re-emitted by a neighbor); at the fixpoint the edge set is a
-    forest of stars rooted at each component's minimum id, so the label
-    is just the neighbor-min. Convergence is checked with an
-    order-independent (count, xor-of-xxhash64) signature of the edge
-    set — one cheap aggregate action per round, no set-difference
-    shuffle. Expected O(log n) alternations independent of graph
-    DIAMETER — the label-prop loop needs O(log diameter) rounds, so on
-    high-diameter street chains the star loop converges in fewer driver
-    rounds (each round costs more shuffles; bench at your scale).
-    """
-    e = (
-        g.edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+    (_, labels), _ = fixpoint(
+        "connected_components",
+        (edges_bi, g.nodes.select("id", F.col("id").alias("comp"))),
+        step,
+        lambda s: s[1].filter(F.col("comp") != F.col("prev")).count() == 0,
+        max_iter,
     )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"), F.bit_xor(F.xxhash64("u", "v")).alias("h")
-        ).collect()[0]
-        return (row["n"], row["h"])
-
-    def _bidir(df: DataFrame) -> DataFrame:
-        return df.unionByName(df.select(F.col("v").alias("u"), F.col("u").alias("v")))
-
-    def _mins(bidir: DataFrame) -> DataFrame:
-        return bidir.groupBy("u").agg(
-            F.least(F.col("u"), F.min("v")).alias("m")
-        )
-
-    sig = _sig(e)
-    for _ in range(max_iter):
-        # large-star: (u,v) with v > u  →  (v, m(u))
-        b = _bidir(e)
-        ls = (
-            b.filter(F.col("v") > F.col("u"))
-            .join(_mins(b), "u")
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # small-star: (u,v) with v < u → (v, m(u));  plus (u, m(u))
-        b2 = _bidir(ls)
-        m2 = _mins(b2)
-        ss = (
-            b2.filter(F.col("v") < F.col("u"))
-            .join(m2, "u")
-            .select(F.col("v").alias("u"), "m")
-            .unionByName(m2.select("u", "m"))
-            .select(F.col("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_sig = _sig(ss)
-        e = ss
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(f"star contraction did not converge in {max_iter} rounds")
-
-    nbr_min = _bidir(e).groupBy("u").agg(F.min("v").alias("mv"))
-    return g.nodes.select("id").join(
-        nbr_min.withColumnRenamed("u", "id"), "id", "left"
-    ).select("id", F.least(F.col("id"), F.coalesce("mv", "id")).alias("comp"))
+    return labels.select("id", "comp")
 
 
 def component_size_distribution(labels: DataFrame) -> DataFrame:
@@ -216,35 +134,38 @@ def kcore(
     over the endpoint union (map-side combined — hub nodes collapse
     per input split) and two left-semi joins filtering the edge
     relation, all on the same src/dst keys (bucketing the edges makes
-    them co-located); the edge set only shrinks. One count action per
-    round; lineage truncated per round with localCheckpoint.
+    them co-located); the edge set only shrinks. One
+    ``plans.iterate.fixpoint`` round per peel, its action the survivor
+    count.
     """
-    e = edges.select("src", "dst").localCheckpoint(eager=False)
-    n_prev = None
-    rounds = 0
-    while True:
+
+    def peel(state):
+        e, keep = state
+        if keep is not None:
+            e = (
+                e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
+                .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
+                .select("src", "dst")
+            )
         deg = (
             e.select(F.col("src").alias("id"))
             .unionByName(e.select(F.col("dst").alias("id")))
             .groupBy("id")
             .agg(F.count(F.lit(1)).alias("d"))
         )
-        keep = deg.filter(F.col("d") >= k).select("id").localCheckpoint(eager=False)
-        n = keep.count()  # the round's single action
-        if n == n_prev:
-            return keep, rounds
-        if n == 0:
-            return keep, rounds + 1
-        n_prev = n
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"k-core did not converge within {max_rounds} rounds")
-        e = (
-            e.join(keep.withColumnRenamed("id", "src"), "src", "left_semi")
-            .join(keep.withColumnRenamed("id", "dst"), "dst", "left_semi")
-            .select("src", "dst")
-            .localCheckpoint(eager=False)
-        )
+        return e, deg.filter(F.col("d") >= k).select("id")
+
+    # rounds = the peels after the first; the last one drops nothing and
+    # confirms the core (for an empty core, one extra empty round)
+    (_, keep), rounds = fixpoint(
+        "kcore",
+        peel((edges.select("src", "dst"), None)),
+        peel,
+        stable(lambda s: s[1].count()),
+        max_rounds,
+        check_start=True,
+    )
+    return keep, rounds
 
 
 def coreness(
@@ -341,31 +262,29 @@ def ktruss(edges: DataFrame, k: int, max_rounds: int = 100) -> tuple[DataFrame, 
     counts drops in unchanged if id order correlates with degree —
     with the same output, since support is orientation-free). Each
     round: one wedge equi-join + one left-semi closure + one algebraic
-    count + one inner join back, one count action, lineage truncated
-    with localCheckpoint; the edge relation only shrinks.
+    count + one inner join back, one ``plans.iterate.fixpoint`` round
+    whose action is the survivor count; the edge relation only shrinks.
     """
-    e = (
-        edges.select(
-            F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
+
+    def peel(state):
+        e, keep = state
+        if keep is not None:
+            e = keep.select("src", "dst")
+        return e, _edge_support(e).filter(F.col("support") >= k - 2)
+
+    canon = edges.select(
+        F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
+    ).distinct()
+    # round counting as in kcore
+    (_, keep), rounds = fixpoint(
+        "ktruss",
+        peel((canon, None)),
+        peel,
+        stable(lambda s: s[1].count()),
+        max_rounds,
+        check_start=True,
     )
-    n_prev = None
-    rounds = 0
-    while True:
-        sup = _edge_support(e)
-        keep = sup.filter(F.col("support") >= k - 2).localCheckpoint(eager=False)
-        n = keep.count()  # the round's single action
-        if n == n_prev:
-            return keep, rounds
-        if n == 0:
-            return keep.select("src", "dst", "support"), rounds + 1
-        n_prev = n
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"k-truss did not converge within {max_rounds} rounds")
-        e = keep.select("src", "dst").localCheckpoint(eager=False)
+    return keep, rounds
 
 
 def lpa_communities(nodes: DataFrame, edges: DataFrame, rounds: int = 4) -> DataFrame:

@@ -43,9 +43,10 @@ Scale shape at 10^10 edges: the edge relation is touched once per
 round by two hash joins on endpoint keys (bucketed storage co-locates
 them, sources/bucketed.py); the per-round aggregation output is one
 row per component, shrinking at least geometrically; the pointer
-tables live on component keys only. Lineage is truncated per round
-with plans.barrier.stats_barrier rather than plain localCheckpoint:
-the pointer-doubling self-joins compound Catalyst's product-of-
+tables live on component keys only. The outer loop and the pointer
+doubling both run through plans.iterate.fixpoint, whose checkpoint is
+plans.barrier.stats_barrier rather than plain localCheckpoint: the
+pointer-doubling self-joins compound Catalyst's product-of-
 children size estimate into a BigInt whose bit-length doubles per
 jump (minutes of driver CPU by round 4 at sf0.01, then OOM — see
 barrier.py for the jstack evidence), and the barrier resets the
@@ -57,7 +58,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ophois_spark.plans.barrier import stats_barrier
+from ophois_spark.plans.iterate import fixpoint
 
 
 def minimum_spanning_forest(
@@ -70,27 +71,25 @@ def minimum_spanning_forest(
     (src, dst, w) with one row per undirected edge (any orientation;
     self-loops ignored). Ties broken by (w, src, dst), so the result
     is the unique MSF of that total order."""
-    e = (
-        edges.select("src", "dst", "w")
-        .filter(F.col("src") != F.col("dst"))
-        .transform(stats_barrier)
-    )
-    comp = nodes.select("id", F.col("id").alias("comp")).transform(stats_barrier)
+
+    def cross(e: DataFrame, comp: DataFrame) -> DataFrame:
+        return (
+            e.join(comp.select(F.col("id").alias("src"), F.col("comp").alias("ca")), "src")
+            .join(comp.select(F.col("id").alias("dst"), F.col("comp").alias("cb")), "dst")
+            .filter(F.col("ca") != F.col("cb"))
+        )
+
+    def double(s: DataFrame) -> DataFrame:
+        return (
+            s.alias("a")
+            .join(s.select(F.col("comp").alias("s"), F.col("s").alias("s2")).alias("b"), "s")
+            .select("comp", F.col("s2").alias("s"), F.col("s").alias("prev"))
+        )
+
     msf_parts: list[DataFrame] = []
 
-    for _ in range(max_rounds):
-        x = (
-            e.join(
-                comp.select(F.col("id").alias("src"), F.col("comp").alias("ca")), "src"
-            )
-            .join(
-                comp.select(F.col("id").alias("dst"), F.col("comp").alias("cb")), "dst"
-            )
-            .filter(F.col("ca") != F.col("cb"))
-            .transform(stats_barrier)
-        )
-        if x.isEmpty():
-            break
+    def merge(state):
+        e, comp, x = state
         cand = x.select(
             F.col("ca").alias("comp"), "src", "dst", "w", F.col("cb").alias("other")
         ).unionByName(
@@ -102,7 +101,6 @@ def minimum_spanning_forest(
             cand.groupBy("comp")
             .agg(F.min(F.struct("w", "src", "dst", "other")).alias("m"))
             .select("comp", "m.src", "m.dst", "m.w", "m.other")
-            .transform(stats_barrier)
         )
         msf_parts.append(chosen.select("src", "dst", "w").distinct())
 
@@ -125,37 +123,32 @@ def minimum_spanning_forest(
             )
         )
         allc = comp.select("comp").distinct()
-        s = (
-            allc.join(s, "comp", "left")
-            .select("comp", F.coalesce("s", F.col("comp")).alias("s"))
-            .transform(stats_barrier)
+        s = allc.join(s, "comp", "left").select(
+            "comp", F.coalesce("s", F.col("comp")).alias("s")
         )
         # pointer doubling to the rooted fixpoint (s∘s == s)
-        for _ in range(max_jump):
-            s2 = (
-                s.alias("a")
-                .join(
-                    s.select(F.col("comp").alias("s"), F.col("s").alias("s2")).alias(
-                        "b"
-                    ),
-                    "s",
-                )
-                .select("comp", F.col("s2").alias("s"), F.col("s").alias("prev"))
-                .transform(stats_barrier)
-            )
-            changed = s2.filter(F.col("s") != F.col("prev")).count()
-            s = s2.select("comp", "s")
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(f"pointer doubling did not root in {max_jump} steps")
-        comp = (
-            comp.join(s.select("comp", F.col("s").alias("newc")), "comp")
-            .select("id", F.col("newc").alias("comp"))
-            .transform(stats_barrier)
+        s, _ = fixpoint(
+            "pointer doubling",
+            s,
+            double,
+            lambda s: s.filter(F.col("s") != F.col("prev")).count() == 0,
+            max_jump,
         )
-    else:
-        raise RuntimeError(f"Boruvka did not converge in {max_rounds} rounds")
+        comp = comp.join(s.select("comp", F.col("s").alias("newc")), "comp").select(
+            "id", F.col("newc").alias("comp")
+        )
+        return e, comp, cross(e, comp)
+
+    e = edges.select("src", "dst", "w").filter(F.col("src") != F.col("dst"))
+    comp = nodes.select("id", F.col("id").alias("comp"))
+    fixpoint(
+        "Boruvka",
+        (e, comp, cross(e, comp)),
+        merge,
+        lambda s: s[2].count() == 0,
+        max_rounds,
+        check_start=True,
+    )
 
     if not msf_parts:
         # Empty forest: derive the schema from the input edge relation so

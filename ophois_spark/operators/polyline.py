@@ -28,10 +28,9 @@ loop runs max-recursion-depth times (<= interior vertex count of the
 longest way; O(log L) on typical geometry), never once per segment.
 Per round: ONE window shuffle keyed (way_id, lo, hi) — fine-grained
 keys, so a mega-way's segments spread across tasks — plus one equi-join
-of the shrinking active set against the (small) split set. Lineage is
-truncated per round with lazy localCheckpoint, the same discipline as
-every iterative operator here (components.py, contraction.py), and each
-round costs exactly one Spark action (the emptiness probe).
+of the shrinking active set against the (small) split set. The loop
+runs through plans.iterate.fixpoint, and each round costs exactly one
+Spark action (the active-set count).
 
 Scale shape at 10^12 vertices: work per round is linear in the
 still-active vertex count, which only shrinks (every active segment
@@ -47,6 +46,8 @@ from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from ophois_spark.plans.iterate import fixpoint
 
 _DEC = "decimal(38,0)"
 
@@ -64,15 +65,12 @@ def rdp_simplify(
     oracle's worst-case-bounded unroll relies on.
     """
     eps2 = int(eps) * int(eps)
-    # pts feeds FOUR branches (endpoint bounds, kept endpoints, and the
-    # two endpoint-coordinate lookups) — truncate once so the caller's
-    # input lineage isn't replayed per branch
     pts = points.select(
         F.col("way_id").cast("long").alias("way_id"),
         F.col("seq").cast("long").alias("seq"),
         F.col("x").cast("long").alias("x"),
         F.col("y").cast("long").alias("y"),
-    ).localCheckpoint(eager=False)
+    )
     ends = pts.groupBy("way_id").agg(
         F.min("seq").alias("lo"), F.max("seq").alias("hi")
     )
@@ -99,7 +97,6 @@ def rdp_simplify(
         .join(lo_c, ["way_id", "lo"])
         .join(hi_c, ["way_id", "hi"])
         .select("way_id", "seq", "x", "y", "lo", "hi", "ax", "ay", "bx", "bby")
-        .localCheckpoint(eager=False)
     )
 
     dx = F.col("bx") - F.col("ax")
@@ -120,14 +117,12 @@ def rdp_simplify(
         F.col("lhs").desc(), F.col("seq")
     )
     kept_parts = [kept_ends]
-    rounds = 0
-    while cur.count() > 0:  # one action per round; materializes the checkpoint
-        rounds += 1
-        if rounds > max_rounds:
-            raise RuntimeError(f"rdp did not terminate within {max_rounds} rounds")
-        scored = cur.select("*", lhs.alias("lhs"), rhs.alias("rhs"))
+
+    def pick(cur: DataFrame) -> tuple[DataFrame, DataFrame]:
+        """Each active segment's split vertex, if it is out of tolerance."""
         top = (
-            scored.withColumn("rn", F.row_number().over(w))
+            cur.select("*", lhs.alias("lhs"), rhs.alias("rhs"))
+            .withColumn("rn", F.row_number().over(w))
             .filter((F.col("rn") == 1) & (F.col("lhs") > F.col("rhs")))
             .select(
                 "way_id",
@@ -137,8 +132,12 @@ def rdp_simplify(
                 F.col("x").alias("sx"),
                 F.col("y").alias("sy"),
             )
-            .localCheckpoint(eager=False)
         )
+        return cur, top
+
+    def split(state: tuple[DataFrame, DataFrame]) -> DataFrame:
+        """Keep the split vertices; split their segments around them."""
+        cur, top = state
         kept_parts.append(
             top.select(
                 "way_id",
@@ -148,8 +147,8 @@ def rdp_simplify(
             )
         )
         before = F.col("seq") < F.col("s_seq")
-        cur = (
-            scored.join(top, ["way_id", "lo", "hi"])
+        return (
+            cur.join(top, ["way_id", "lo", "hi"])
             .filter(F.col("seq") != F.col("s_seq"))
             .select(
                 "way_id",
@@ -163,6 +162,9 @@ def rdp_simplify(
                 F.when(before, F.col("sx")).otherwise(F.col("bx")).alias("bx"),
                 F.when(before, F.col("sy")).otherwise(F.col("bby")).alias("bby"),
             )
-            .localCheckpoint(eager=False)
         )
+
+    _, rounds = fixpoint(
+        "rdp", cur, (pick, split), lambda cur: cur.count() == 0, max_rounds, check_start=True
+    )
     return reduce(DataFrame.unionByName, kept_parts), rounds

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ophois_spark.operators.graph import StreetGraph
+from ophois_spark.plans.iterate import signature
 
 
 def _bidirectional(edges: DataFrame, extra: list[str] | None = None) -> DataFrame:
@@ -95,16 +96,7 @@ def bounded_dist_m(g: StreetGraph, seeds: DataFrame, max_hops: int = 4) -> DataF
         .withColumn("dist_m", F.lit(0).cast("long"))
         .localCheckpoint(eager=True)
     )
-
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("dist_m").alias("s"),
-            F.bit_xor(F.xxhash64("id", "dist_m")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["s"], row["h"])
-
-    sig = _sig(dist)
+    sig = signature(dist, "id", "dist_m")
     for _ in range(max_hops):
         relaxed = dist.join(bi, dist["id"] == bi["a"]).select(
             F.col("b").alias("id"), (F.col("dist_m") + F.col("w")).alias("dist_m")
@@ -115,7 +107,7 @@ def bounded_dist_m(g: StreetGraph, seeds: DataFrame, max_hops: int = 4) -> DataF
             .agg(F.min("dist_m").alias("dist_m"))
             .localCheckpoint(eager=True)
         )
-        new_sig = _sig(dist)
+        new_sig = signature(dist, "id", "dist_m")
         if new_sig == sig:
             break
         sig = new_sig

@@ -45,10 +45,9 @@ transitive-closure oracle with no round pinning.
 Scale shape at 10^9 hosts: every round is equi-joins + algebraic
 min/max/count aggregations on (id)/(src)/(dst) — bucketing the edge
 relation by src (sources/bucketed.py) co-locates the propagation
-joins; the remaining relation shrinks monotonically and is
-localCheckpoint-truncated per round like every iterative operator
-here. Remaining-set cardinality is tracked arithmetically from the
-per-round convergence counts, so no extra count actions are spent.
+joins; the remaining relation shrinks monotonically. The trim, the
+propagation and the peel loop each run through plans.iterate.fixpoint,
+whose per-round action is the remaining-node or changed-label count.
 Worst-case round count is the SCC-DAG depth (a pure chain); real web
 graphs have shallow condensations (Broder's bowtie), which is the
 case this engine targets — the max_rounds cap makes the pathological
@@ -60,14 +59,17 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ophois_spark.plans.iterate import fixpoint
+
 
 def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataFrame:
     """Iterate f(v) := min(f(v), min over successors' f) and
     b(v) := min(b(v), min over predecessors' b) together to the joint
-    fixpoint. labels: (id, f, b); edges: (src, dst). One checkpoint +
-    one convergence count per round (components.py protocol)."""
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+    fixpoint. labels: (id, f, b); edges: (src, dst). One
+    ``plans.iterate.fixpoint`` round per step, its action the count of
+    changed labels."""
+
+    def step(labels: DataFrame) -> DataFrame:
         fmin = (
             edges.join(
                 labels.select(F.col("id").alias("dst"), F.col("f").alias("nf")), "dst"
@@ -84,7 +86,7 @@ def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataF
             .agg(F.min("nb").alias("nb"))
             .withColumnRenamed("dst", "id")
         )
-        stepped = (
+        return (
             labels.join(fmin, "id", "left")
             .join(bmin, "id", "left")
             .select(
@@ -95,14 +97,40 @@ def _fused_fixpoint(labels: DataFrame, edges: DataFrame, max_iter: int) -> DataF
                 F.col("b").alias("pb"),
             )
         )
-        stepped = stepped.localCheckpoint(eager=True)
-        changed = stepped.filter(
-            (F.col("f") != F.col("pf")) | (F.col("b") != F.col("pb"))
-        ).count()
-        labels = stepped.select("id", "f", "b")
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"min-label propagation did not converge in {max_iter} rounds")
+
+    labels, _ = fixpoint(
+        "min-label propagation",
+        labels,
+        step,
+        lambda s: s.filter((F.col("f") != F.col("pf")) | (F.col("b") != F.col("pb"))).count()
+        == 0,
+        max_iter,
+    )
+    return labels.select("id", "f", "b")
+
+
+def _alive(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+    """Trim level, phase 1: the nodes with both an in- and an out-edge
+    inside the remaining subgraph."""
+    _, rem_edges = state
+    deg = (
+        rem_edges.select(F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i"))
+        .unionByName(
+            rem_edges.select(F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i"))
+        )
+        .groupBy("id")
+        .agg(F.max("o").alias("o"), F.max("i").alias("i"))
+    )
+    return deg.filter((F.col("o") == 1) & (F.col("i") == 1)).select("id"), rem_edges
+
+
+def _among(state: tuple[DataFrame, DataFrame]) -> tuple[DataFrame, DataFrame]:
+    """Trim level, phase 2: the edges between the surviving nodes."""
+    alive, rem_edges = state
+    return alive, (
+        rem_edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
+        .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
+    )
 
 
 def strongly_connected_components(
@@ -115,85 +143,51 @@ def strongly_connected_components(
     """→ labels DataFrame (id, scc) with scc = min node id in the
     strongly-connected component. nodes: (id); edges: directed
     (src, dst). Self-loops and duplicate edges are ignored."""
-    remaining = nodes.select("id").distinct().localCheckpoint(eager=True)
-    rem_edges = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_rem = remaining.count()
     settled: list[DataFrame] = []
+    n_rem = 0  # remaining-node count, read off each round's action
 
-    def _trim_phase() -> None:
-        """Peel the acyclic fringe level by level; settle the whole
-        trimmed set as singletons in one batch at phase end."""
-        nonlocal remaining, rem_edges, n_rem
-        pre = remaining
-        for _ in range(max_trim):
-            deg = (
-                rem_edges.select(
-                    F.col("src").alias("id"), F.lit(1).alias("o"), F.lit(0).alias("i")
-                )
-                .unionByName(
-                    rem_edges.select(
-                        F.col("dst").alias("id"), F.lit(0).alias("o"), F.lit(1).alias("i")
-                    )
-                )
-                .groupBy("id")
-                .agg(F.max("o").alias("o"), F.max("i").alias("i"))
-            )
-            alive = (
-                deg.filter((F.col("o") == 1) & (F.col("i") == 1))
-                .select("id")
-                .localCheckpoint(eager=True)
-            )
-            n_alive = alive.count()
-            if n_alive == n_rem:
-                break
-            rem_edges = (
-                rem_edges.join(alive.withColumnRenamed("id", "src"), "src", "left_semi")
-                .join(alive.withColumnRenamed("id", "dst"), "dst", "left_semi")
-                .localCheckpoint(eager=True)
-            )
-            remaining, n_rem = alive, n_alive
-            if n_rem == 0:
-                break
-        else:
-            raise RuntimeError(f"trim did not stabilize in {max_trim} levels")
-        if pre is not remaining:
+    def trimmed(state) -> bool:
+        nonlocal n_rem
+        prev, n_rem = n_rem, state[0].count()
+        return n_rem in (0, prev)
+
+    def cleared(state) -> bool:
+        nonlocal n_rem
+        n_rem = state[0].count()
+        return n_rem == 0
+
+    def peel(state):
+        """Trim the acyclic fringe level by level and settle the trimmed
+        set as singletons in one batch; then settle every node whose
+        forward and backward min labels agree."""
+        pre, n_pre = state[0], n_rem
+        (remaining, rem_edges), _ = fixpoint("trim", state, (_alive, _among), trimmed, max_trim)
+        if n_rem < n_pre:
             settled.append(
-                pre.join(remaining, "id", "left_anti").select(
-                    "id", F.col("id").alias("scc")
-                )
+                pre.join(remaining, "id", "left_anti").select("id", F.col("id").alias("scc"))
             )
-
-    for _ in range(max_rounds):
-        _trim_phase()
         if n_rem == 0:
-            break
-        base = remaining.select(
-            "id", F.col("id").alias("f"), F.col("id").alias("b")
-        )
+            return remaining, rem_edges
+        base = remaining.select("id", F.col("id").alias("f"), F.col("id").alias("b"))
         lab = _fused_fixpoint(base, rem_edges, max_iter=max_prop)
-        done = (
-            lab.filter(F.col("f") == F.col("b"))
-            .select("id", F.col("f").alias("scc"))
-            .localCheckpoint(eager=True)
-        )
-        n_done = done.count()
+        done = lab.filter(F.col("f") == F.col("b")).select("id", F.col("f").alias("scc"))
         settled.append(done)
-        n_rem -= n_done
-        if n_rem == 0:
-            break
-        remaining = remaining.join(done, "id", "left_anti").localCheckpoint(eager=True)
-        rem_edges = (
+        return remaining.join(done, "id", "left_anti"), (
             rem_edges.join(done.select(F.col("id").alias("src")), "src", "left_anti")
             .join(done.select(F.col("id").alias("dst")), "dst", "left_anti")
-            .localCheckpoint(eager=True)
         )
-    else:
-        raise RuntimeError(f"SCC peeling did not converge in {max_rounds} rounds")
+
+    fixpoint(
+        "SCC peeling",
+        (
+            nodes.select("id").distinct(),
+            edges.select("src", "dst").filter(F.col("src") != F.col("dst")).distinct(),
+        ),
+        peel,
+        cleared,
+        max_rounds,
+        check_start=True,
+    )
     out = settled[0]
     for part in settled[1:]:
         out = out.unionByName(part)

@@ -26,15 +26,17 @@ the edges by src makes every iteration's join co-located (zero
 exchange on the big side, see sources/bucketed.py); out-degrees fold
 into the edge relation ONCE before the loop instead of re-joining per
 iteration; hot dst nodes (the skew case: everyone links to the hub)
-collapse map-side because the dst aggregation is algebraic. Lineage is
-truncated per round with localCheckpoint like every iterative operator
-here.
+collapse map-side because the dst aggregation is algebraic. The
+convergence loops run through ``plans.iterate.fixpoint``; the
+fixed-count unrolls truncate lineage per round with localCheckpoint.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from ophois_spark.plans.iterate import fixpoint, signature
 
 PAGERANK_SCALE = 1_000_000
 PAGERANK_ITERS = 5
@@ -71,54 +73,48 @@ def pagerank_converged(
     Recurrence is detected on an exact integer signature per round —
     (count, sum, xor of per-row hashes), order-independent — which is
     also the round's single Spark action: the aggregation materializes
-    the lazily-checkpointed rank relation and reads off the signal at
-    once (the ``components.py`` fixpoint-loop shape; per-round lineage
-    is truncated so round k never replays rounds 1..k-1).
+    the round's checkpoint and reads off the signal at once
+    (``plans.iterate.fixpoint``; round k never replays rounds 1..k-1).
     ``max_rounds`` is a safety cap; the loop raises if it trips,
     because returning a non-recurrent state would silently break the
     oracle contract.
     """
     base = (DAMPING_DEN - DAMPING_NUM) * scale // DAMPING_DEN
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", F.lit(scale).cast("long").alias("rank")).localCheckpoint(
-        eager=False
-    )
 
-    def _sig(df: DataFrame) -> tuple:
-        row = df.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("rank").alias("s"),
-            F.bit_xor(F.xxhash64("id", "rank")).alias("h"),
-        ).collect()[0]
-        return (row["n"], row["s"], row["h"])
-
-    seen: dict[tuple, int] = {_sig(ranks): 0}
-    for rounds in range(1, max_rounds + 1):
+    def step(state):
+        e, ranks = state
         sums = (
             e.join(ranks.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"), F.expr("rank div outdeg").alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        ranks = (
-            nodes.join(sums, "id", "left")
-            .select(
-                "id",
-                (
-                    F.lit(base)
-                    + F.expr(f"({DAMPING_NUM} * coalesce(s, 0L)) div {DAMPING_DEN}")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=False)
+        return e, nodes.join(sums, "id", "left").select(
+            "id",
+            (
+                F.lit(base)
+                + F.expr(f"({DAMPING_NUM} * coalesce(s, 0L)) div {DAMPING_DEN}")
+            ).cast("long").alias("rank"),
         )
-        sig = _sig(ranks)
-        if sig in seen:
-            return ranks, rounds
-        seen[sig] = rounds
-    raise RuntimeError(
-        f"integer pagerank did not recur within {max_rounds} rounds"
+
+    seen: set[tuple] = set()
+
+    def recurs(state) -> bool:
+        sig = signature(state[1], "id", "rank")
+        hit = sig in seen
+        seen.add(sig)
+        return hit
+
+    (_, ranks), rounds = fixpoint(
+        "integer pagerank",
+        (edges.join(outdeg, "src"), nodes.select("id", F.lit(scale).cast("long").alias("rank"))),
+        step,
+        recurs,
+        max_rounds,
+        check_start=True,
     )
+    return ranks, rounds
 
 
 def pagerank(
@@ -193,35 +189,37 @@ def pagerank_float(
     off in the round's single action.
     """
     outdeg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    e = edges.join(outdeg, "src").localCheckpoint(eager=False)
-    ranks = nodes.select("id", F.lit(1.0).alias("rank")).localCheckpoint(eager=False)
     base = 1.0 - damping
-    for rounds in range(1, max_rounds + 1):
+
+    def step(state):
+        e, ranks = state
         sums = (
             e.join(ranks.withColumnRenamed("id", "src"), "src")
             .select(F.col("dst").alias("id"), (F.col("rank") / F.col("outdeg")).alias("c"))
             .groupBy("id")
             .agg(F.sum("c").alias("s"))
         )
-        nxt = (
-            ranks.join(sums, "id", "left")
-            .select(
-                "id",
-                F.col("rank").alias("prev"),
-                (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=False)
+        return e, ranks.join(sums, "id", "left").select(
+            "id",
+            F.col("rank").alias("prev"),
+            (F.lit(base) + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))).alias("rank"),
         )
-        row = nxt.agg(
+
+    def settled(state) -> bool:
+        row = state[1].agg(
             F.sum(F.abs(F.col("rank") - F.col("prev"))).alias("l1"),
             F.count(F.lit(1)).alias("n"),
         ).collect()[0]
-        ranks = nxt.select("id", "rank")
-        if row["l1"] / max(row["n"], 1) < tol:
-            return ranks, rounds
-    raise RuntimeError(f"float pagerank did not reach tol={tol} in {max_rounds} rounds")
+        return row["l1"] / max(row["n"], 1) < tol
+
+    (_, ranks), rounds = fixpoint(
+        "float pagerank",
+        (edges.join(outdeg, "src"), nodes.select("id", F.lit(1.0).alias("rank"))),
+        step,
+        settled,
+        max_rounds,
+    )
+    return ranks.select("id", "rank"), rounds
 
 
 def host_graph(

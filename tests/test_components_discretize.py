@@ -34,38 +34,6 @@ def test_bfs_largest_component_golden(spark):
     assert degrees_map(lc) == expected
 
 
-@pytest.mark.slow
-@settings(max_examples=8, deadline=None)
-@given(st.integers(min_value=0, max_value=2**32))
-def test_star_and_labelprop_components_equivalent(spark, seed):
-    """A/B invariant: large-star/small-star contraction and label
-    propagation produce identical (id, comp) labels — including on a
-    long chain appended to stress diameter. Both algorithms are named
-    EXPLICITLY (connected_components delegates to labelprop, so calling
-    it here would compare labelprop against itself)."""
-    import random
-
-    from ophois_spark.operators.components import (
-        connected_components_labelprop,
-        connected_components_star,
-    )
-
-    rnd = random.Random(seed)
-    n = rnd.randint(2, 30)
-    ids = [str(100 + i) for i in range(n)]
-    links = set()
-    for _ in range(rnd.randint(0, 2 * n)):
-        a, b = rnd.sample(ids, 2)
-        links.add((min(a, b), max(a, b)))
-    chain = [str(500 + i) for i in range(12)]
-    links |= set(zip(chain, chain[1:]))
-    nodes = [(i, "48.0", "2.0") for i in ids + chain]
-    g = graph_from_tuples(spark, nodes, sorted(links))
-    a = sorted(map(tuple, connected_components_star(g).collect()))
-    b = sorted(map(tuple, connected_components_labelprop(g).collect()))
-    assert a == b
-
-
 def test_component_size_distribution(spark):
     g = graph_from_tuples(spark, BFS_NODES, BFS_LINKS)
     labels = connected_components(g)

@@ -13,6 +13,7 @@ Usage: python tools/driver_gate_replica.py [n_rows] [sf_dir]
 
 from __future__ import annotations
 
+import math
 import os
 import sys
 
@@ -25,6 +26,14 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+_NAN = object()
+
+
+def _nan_key(v):
+    """Compare values exactly, except that NaN equals NaN."""
+    return _NAN if isinstance(v, float) and math.isnan(v) else v
 
 
 def normalize(df: pd.DataFrame) -> pd.DataFrame:
@@ -59,7 +68,9 @@ def main() -> int:
             assert len(got) == len(want), f"rows {len(got)} != {len(want)}"
             for c in got.columns:
                 a, b = got[c].tolist(), want[c].tolist()
-                assert a == b, f"column {c} differs: {a[:3]} vs {b[:3]}"
+                assert list(map(_nan_key, a)) == list(map(_nan_key, b)), (
+                    f"column {c} differs: {a[:3]} vs {b[:3]}"
+                )
             print(f"[{i:2d}/{n}] PASS {name} ({len(got)} rows)", flush=True)
         except Exception as exc:  # noqa: BLE001 - report-and-continue sweep
             failures.append((name, exc))
